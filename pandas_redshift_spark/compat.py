@@ -34,6 +34,7 @@ from pandas_redshift_spark.session import build_session
 from pandas_redshift_spark.sources.bridge import (
     S3_ACCEPTED_KWARGS,
     SparkRedshiftBridge,
+    _save_as_table,
     connect,
     logger,
     logging_config,
@@ -218,9 +219,7 @@ def create_redshift_table(
             if isinstance(pdf, pd.DataFrame)
             else pdf.limit(0)
         )
-        apply_validated_names(empty).write.mode("overwrite").saveAsTable(
-            redshift_table_name
-        )
+        _save_as_table(apply_validated_names(empty), redshift_table_name, "overwrite")
 
 
 def s3_to_redshift(

@@ -51,12 +51,11 @@ def _profile_oracle() -> str:
 def profile_table_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column table profile (rows / nulls / distinct / min / max)
     — the first query any pipeline runs against an unfamiliar 100 TB
-    table.  ONE scan computes every column's aggregates side by side
-    (all mergeable, so partial aggregation collapses them map-side);
-    the per-column report rows then unpivot from the single 1-row
-    frame with one stack() generator, not per-column rescans or a
-    union chain.  min/max cast to string so one frame profiles
-    heterogeneous column types.
+    table.  The numeric and the string columns profile in two UNION
+    branches, each a scan pruned to its own columns feeding a
+    value-dedupe aggregate (all partials mergeable, so they collapse
+    map-side); each column yields one report row.  min/max cast to
+    string so one frame profiles heterogeneous column types.
 
     Plan note (round-5 rewrite): the r4 shape — N ``countDistinct``
     columns plus ``min/max(string)`` in ONE agg — planned as an

@@ -52,11 +52,10 @@ class QuerySpec:
     #: independent replay.  tests/test_cert_oracles.py pins
     #: cert-oracle == primary-oracle result at a small SF.
     cert_oracle: Callable | None = None
-    #: r15: True routes repeat invocations through
-    #: ``session.memoized_frame`` — the BUILT logical plan (an
-    #: immutable, unexecuted DataFrame) is shared per (session,
-    #: sf_dir), the same object class the endorsed ``_TABLE_MEMO`` /
-    #: ``_PQ_EXPR_MEMO`` memos already share.  Nothing executed is
+    #: True shares the BUILT logical plan (an immutable, unexecuted
+    #: DataFrame) per (session, sf_dir) through
+    #: ``session.SESSION_MEMO`` (family ``frame``), the same memo that
+    #: shares table scans and PQ expression trees.  Nothing executed is
     #: cached; every run still computes from the parquet inputs.  Set
     #: only on queries whose MEASURED per-invocation Python build cost
     #: is >= ~0.1 s (py4j round-trips re-assembling the identical
@@ -92,11 +91,11 @@ def query(
             raise ValueError(f"duplicate query name {name!r}")
         run = fn
         if memo_plan:
-            from pandas_redshift_spark.session import memoized_frame
+            from pandas_redshift_spark.session import SESSION_MEMO
 
             def run(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: F811
-                return memoized_frame(
-                    spark, ("plan", name, sf_dir), lambda: fn(spark, sf_dir)
+                return SESSION_MEMO.get(
+                    spark, "frame", (name, sf_dir), lambda: fn(spark, sf_dir)
                 )
 
             run.__doc__ = fn.__doc__

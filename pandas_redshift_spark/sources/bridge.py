@@ -17,12 +17,16 @@ behind configuration — there is no warehouse in CI; the local catalog
 from __future__ import annotations
 
 import logging
+import math
+import numbers
 import re
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
+import numpy as np
 import pandas as pd
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from pandas_redshift_spark.plans.layout import apply_layout
@@ -303,7 +307,7 @@ class SparkRedshiftBridge:
                 sortkey=sortkey,
                 sort_interleaved=sort_interleaved,
             )
-            out.write.mode(mode).saveAsTable(_catalog_name(table_name))
+            _save_as_table(out, _catalog_name(table_name), mode)
         if verbose:
             logger.info("wrote table %s (mode=%s)", table_name, mode)
 
@@ -399,7 +403,7 @@ class SparkRedshiftBridge:
             .csv(staged_path)
         )
         mode = "append" if append else "overwrite"
-        sdf.write.mode(mode).saveAsTable(_catalog_name(table_name))
+        _save_as_table(sdf, _catalog_name(table_name), mode)
 
     # -- exec_commit (core.py:307-309) -----------------------------------
     def exec_sql(self, sql_query: str) -> None:
@@ -449,13 +453,26 @@ def connect(
 
 
 def _sql_literal(p: Any) -> str:
+    """One bound parameter as SQL literal text.  Values with no
+    portable literal raise ``ValueError``: NaN/inf, and text holding a
+    backslash (an escape in some dialects, so doubling ``'`` is not
+    enough) or NUL (psycopg2 refuses it too)."""
     if p is None:
         return "NULL"
-    if isinstance(p, bool):
+    if isinstance(p, (bool, np.bool_)):
         return "TRUE" if p else "FALSE"
-    if isinstance(p, (int, float)):
-        return str(p)
-    escaped = str(p).replace("'", "''")
+    if isinstance(p, numbers.Integral):
+        return str(int(p))
+    if isinstance(p, numbers.Real):
+        if not math.isfinite(p):
+            raise ValueError(f"cannot bind non-finite float {p!r} as a SQL literal")
+        return repr(float(p))
+    text = str(p)
+    if "\\" in text or "\x00" in text:
+        raise ValueError(
+            "cannot bind text containing a backslash or NUL as a SQL literal"
+        )
+    escaped = text.replace("'", "''")
     return f"'{escaped}'"
 
 
@@ -537,6 +554,30 @@ def _catalog_name(table_name: str) -> str:
     # 'schema.table' strings are kept; Spark catalogs accept the same
     # two-part shape once the database exists.
     return table_name
+
+
+def _save_as_table(sdf: DataFrame, table_name: str, mode: str) -> None:
+    """``saveAsTable`` over a table directory an earlier process left
+    in the warehouse with no catalog entry (``LOCATION_ALREADY_EXISTS``):
+    an overwrite removes it and retries once, any other mode raises
+    naming it.  Only that error path costs a filesystem call."""
+    try:
+        sdf.write.mode(mode).saveAsTable(table_name)
+    except PySparkException as exc:
+        if exc.getCondition() != "LOCATION_ALREADY_EXISTS":
+            raise
+        location = exc.getMessageParameters()["location"].strip("'`")
+        if mode != "overwrite":
+            raise FileExistsError(
+                f"cannot create table {table_name!r} in {mode} mode: its "
+                f"location {location} is left over from an earlier write; "
+                "remove that directory or write with overwrite"
+            ) from exc
+        logger.warning("removing orphaned table directory %s", location)
+        path = sdf.sparkSession._jvm.org.apache.hadoop.fs.Path(location)
+        hconf = sdf.sparkSession.sparkContext._jsc.hadoopConfiguration()
+        path.getFileSystem(hconf).delete(path, True)
+        sdf.write.mode(mode).saveAsTable(table_name)
 
 
 def _layout_create_options(

@@ -21,18 +21,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pandas_redshift_spark.session import (
-    configure_session,
-    evict_stale,
-    note_memo_hit,
-)
-
-#: (applicationId, parquet path) -> StructType: the file-stream
-#: source needs an explicit schema, and the batch probe that infers
-#: it re-reads the parquet footer on every streaming invocation
-#: (~85 ms measured, r14).  A schema is immutable metadata — same
-#: memo class as session._TABLE_MEMO, stale apps evicted on access.
-_SCHEMA_MEMO: dict[tuple, object] = {}
+from pandas_redshift_spark.session import SESSION_MEMO, configure_session
 
 
 def event_time_ltz(df: DataFrame) -> DataFrame:
@@ -58,14 +47,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     on TimestampType."""
     configure_session(spark)
     path = f"{sf_dir}/events.parquet"
-    app_id = spark.sparkContext.applicationId
-    evict_stale(_SCHEMA_MEMO, app_id)
-    key = (app_id, path)
-    if key not in _SCHEMA_MEMO:
-        _SCHEMA_MEMO[key] = spark.read.parquet(path).schema  # footer probe
-    else:
-        note_memo_hit("stream_schema")
-    schema = _SCHEMA_MEMO[key]
+    # the file-stream source needs an explicit schema, and the batch
+    # footer probe that infers it cost ~85 ms per invocation (r14)
+    schema = SESSION_MEMO.get(
+        spark, "stream_schema", (path,), lambda: spark.read.parquet(path).schema
+    )
     # the file stream source requires a *directory*; stage a symlink
     # dir (the corpus ships single-file tables; a production lake
     # would already be a directory of parquet parts)
@@ -254,9 +240,22 @@ def adaptive_state_width(
     narrower width only wins while state is tiny.  Sizing from source
     bytes picks the measured-best width at BOTH rungs and keeps
     growing to the cap at 100 TB; a real deployment sizes the same
-    knob from key cardinality x throughput."""
+    knob from key cardinality x throughput.
+
+    ``events.parquet`` may be one file or a directory of part files
+    (the usual lake layout); a directory is sized by its data files,
+    skipping the ``_``/``.``-prefixed ones Spark's reader skips."""
+    path = os.path.join(sf_dir, "events.parquet")
     try:
-        nbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+        if os.path.isdir(path):
+            nbytes = sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _dirs, files in os.walk(path)
+                for f in files
+                if not f.startswith(("_", "."))
+            )
+        else:
+            nbytes = os.path.getsize(path)
     except OSError:
         return cap
     width = max(-(-int(nbytes) // int(bytes_per_partition)), floor)  # ceil
@@ -329,9 +328,13 @@ class _scoped_state_confs:
       per side); format v3 (Spark 4, RocksDB-only) folds them into
       ONE store with virtual column families — 4x fewer store
       opens/commits/changelog uploads per batch, same join state
-      machine.  Safe to opt in per drain because every drain starts
-      from a fresh uuid checkpoint (the version is baked into a
-      checkpoint at first batch; there is no cross-run state here).
+      machine.  Safe to opt in per drain even when a checkpoint is
+      reused (``run_to_files`` takes a caller-supplied or
+      deterministic ``out_dir + '_ckpt'`` path): the version is
+      recorded in the checkpoint's offset-log metadata
+      (OffsetSeqMetadata) at the first batch, and a restart restores
+      it from there over the session conf, so a v2 checkpoint keeps
+      running as v2.
     (``sessionWindow.merge.sessions.in.local.partition`` was A/B'd
     for the session drain and NOT adopted: interleaved min-of-5 at
     10x data measured the map-side pre-merge pass costing slightly

@@ -43,6 +43,35 @@ def test_overwrite_mode(bridge):
     assert bridge.sql("SELECT count(*) AS n FROM t_roundtrip").first()["n"] == 1
 
 
+def test_write_table_over_orphaned_warehouse_dir(bridge, spark):
+    """A table directory left in the warehouse by an earlier process
+    (no catalog entry) is replaced by an overwrite; an append refuses
+    it, naming the directory, and leaves it in place."""
+    import os
+    import re
+    import shutil
+    from urllib.parse import urlparse
+
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    pdf = pd.DataFrame({"x": [1, 2, 3]})
+    for t in ("t_orphan_ow", "t_orphan_app"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        os.makedirs(os.path.join(warehouse, t), exist_ok=True)
+        with open(os.path.join(warehouse, t, "part-0-leftover.parquet"), "wb") as f:
+            f.write(b"not parquet")
+    try:
+        bridge.write_table(pdf, "t_orphan_ow")
+        assert bridge.sql("SELECT sum(x) AS s FROM t_orphan_ow").first()["s"] == 6
+
+        leftover = os.path.join(warehouse, "t_orphan_app")
+        with pytest.raises(FileExistsError, match=re.escape(leftover)):
+            bridge.write_table(pdf, "t_orphan_app", append=True)
+        assert os.path.exists(os.path.join(leftover, "part-0-leftover.parquet"))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_orphan_ow")
+        shutil.rmtree(os.path.join(warehouse, "t_orphan_app"), ignore_errors=True)
+
+
 def test_reserved_column_rejected(bridge):
     with pytest.raises(ReservedWordError):
         bridge.write_table(pd.DataFrame({"select": [1]}), "t_roundtrip")

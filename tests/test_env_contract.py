@@ -103,27 +103,62 @@ def test_core_ops_survive_both_ansi_modes(spark, sf_dir):
         spark.conf.set("spark.sql.ansi.enabled", orig)
 
 
-def test_memoized_persist_shares_and_evicts(spark):
-    """One persisted frame per (session, key); same key returns the
-    SAME DataFrame object (plan-stable repeat calls), and entries from
-    other/stopped applicationIds are evicted on access so dead-session
-    plans can't accumulate."""
-    from pandas_redshift_spark.session import _PERSIST_MEMO, memoized_persist
+def test_session_memo_contract():
+    """SessionMemo, the package's one app-scoped memo: a repeat lookup
+    returns the SAME object without rebuilding, entries built under
+    another applicationId are dropped, hits are counted per family,
+    builds may nest lookups, and a build that raises stores nothing."""
+    from types import SimpleNamespace
 
+    from pandas_redshift_spark.session import MEMO_HITS, SessionMemo
+
+    def fake_spark(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    memo = SessionMemo()
+    app1, app2 = fake_spark("app-1"), fake_spark("app-2")
+    hits0 = dict(MEMO_HITS)
     calls = []
 
     def build():
         calls.append(1)
-        return spark.range(3)
+        return object()
 
-    a = memoized_persist(spark, ("t_memo_unit",), build)
-    b = memoized_persist(spark, ("t_memo_unit",), build)
-    assert a is b and len(calls) == 1
-    # plant a stale entry from a "dead" session; next access evicts it
-    _PERSIST_MEMO[("app-does-not-exist", "stale")] = a
-    memoized_persist(spark, ("t_memo_unit",), build)
-    assert ("app-does-not-exist", "stale") not in _PERSIST_MEMO
-    app_id = spark.sparkContext.applicationId
-    assert (app_id, "t_memo_unit") in _PERSIST_MEMO
-    del _PERSIST_MEMO[(app_id, "t_memo_unit")]
-    a.unpersist()
+    a = memo.get(app1, "t_memo_a", ("k",), build)
+    assert memo.get(app1, "t_memo_a", ("k",), build) is a and len(calls) == 1
+    # same key, other family: a separate entry
+    b = memo.get(app1, "t_memo_b", ("k",), build)
+    assert b is not a and len(calls) == 2
+    assert MEMO_HITS["t_memo_a"] - hits0.get("t_memo_a", 0) == 1
+    assert MEMO_HITS.get("t_memo_b", 0) == hits0.get("t_memo_b", 0)
+
+    # a new applicationId drops every entry of the old one
+    c = memo.get(app2, "t_memo_a", ("k",), build)
+    assert c is not a and len(calls) == 3
+    assert memo.get(app1, "t_memo_b", ("k",), build) is not b
+
+    # nested lookups inside a build
+    outer = memo.get(
+        app1,
+        "t_memo_outer",
+        (),
+        lambda: ("outer", memo.get(app1, "t_memo_inner", (), lambda: "inner")),
+    )
+    assert outer == ("outer", "inner")
+    assert memo.get(app1, "t_memo_inner", (), build) == "inner"
+    assert memo.get(app1, "t_memo_outer", (), build) is outer
+
+    # a raising build stores nothing: the next lookup builds again
+    def boom():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        memo.get(app1, "t_memo_a", ("bad",), boom)
+    assert memo.get(app1, "t_memo_a", ("bad",), lambda: "ok") == "ok"
+
+    # clear(family) drops only that family; clear() drops everything
+    memo.clear("t_memo_outer")
+    assert memo.get(app1, "t_memo_outer", (), lambda: "new") == "new"
+    assert memo.get(app1, "t_memo_inner", (), build) == "inner"
+    memo.clear()
+    assert memo.get(app1, "t_memo_inner", (), lambda: "rebuilt") == "rebuilt"

@@ -1,23 +1,18 @@
-"""Focused pins for the round-15 optimization rewrites.
+"""Profiling-family rewrites: the two-branch ``profile_table_summary``.
 
-Same contract as tests/test_r14_optimizations.py: each change altered
-HOW an operator computes, never WHAT — these tests pin the
-equivalence and the plan property the round verified by hand, so a
-future refactor that silently restores the slow shape (or drifts the
-arithmetic) fails in-repo instead of at a driver hash check.
+Each rewrite changed HOW an operator computes, never WHAT: these tests
+pin the equivalence (element-wise ``<=>`` comparisons against the form
+it replaced) and the plan property that makes it fast, so a refactor
+that silently restores the slow shape, or drifts the arithmetic, fails
+in-repo instead of at a driver hash check.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from pandas_redshift_spark.plans.layout import explain_str
 from pandas_redshift_spark.session import Tables
-
-
-def _plan(df, mode: str = "simple") -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
 
 
 def test_profile_summary_split_matches_single_agg(spark, sf_dir):
@@ -96,7 +91,7 @@ def test_profile_summary_numeric_branch_finishes_in_hash_agg(spark, sf_dir):
         profile_table_summary,
     )
 
-    plan = _plan(profile_table_summary(spark, sf_dir))
+    plan = explain_str(profile_table_summary(spark, sf_dir), "simple")
     assert "Union" in plan
     sort_agg_lines = [
         ln for ln in plan.splitlines() if "SortAggregate" in ln
@@ -121,7 +116,7 @@ def test_profile_summary_branch_scans_prune_disjoint_columns(spark, sf_dir):
         profile_table_summary,
     )
 
-    plan = _plan(profile_table_summary(spark, sf_dir), "formatted")
+    plan = explain_str(profile_table_summary(spark, sf_dir), "formatted")
     schemas = [
         ln.split("ReadSchema:", 1)[1]
         for ln in plan.splitlines()
@@ -131,18 +126,3 @@ def test_profile_summary_branch_scans_prune_disjoint_columns(spark, sf_dir):
     for col, _num in _ORDERS_COLS:
         hits = sum(1 for s in schemas if col in s)
         assert hits == 1, (col, schemas)
-
-
-def test_scoped_state_confs_extra_knobs_set_and_restored(spark):
-    """The r15 plan-level drain knob — stream-stream join state
-    format v3 (one virtual-column-family store per partition instead
-    of four) — must apply inside _scoped_state_confs and restore the
-    session's setting on exit, like the r14 knobs."""
-    from pandas_redshift_spark.streaming.windows import _scoped_state_confs
-
-    join_key = "spark.sql.streaming.join.stateFormatVersion"
-    assert _scoped_state_confs.EXTRA_CONFS[join_key] == "3"
-    before = spark.conf.get(join_key, None)
-    with _scoped_state_confs(spark, 4):
-        assert spark.conf.get(join_key) == "3"
-    assert spark.conf.get(join_key, None) == before

@@ -112,20 +112,80 @@ def test_split_placeholders_roundtrip(chunks, ph):
     assert "".join(rebuilt) == sql
 
 
-@given(st.lists(st.one_of(st.integers(), st.text(max_size=8), st.none(), st.booleans()), min_size=0, max_size=4))
+#: bound-parameter values: every kind _sql_literal renders, plus the
+#: hostile ones it must refuse (NaN/inf floats, backslash and NUL text)
+_param = st.one_of(
+    st.integers(min_value=-(2**63), max_value=2**63 - 1),  # BIGINT range
+    st.floats(allow_nan=True, allow_infinity=True),
+    st.text(max_size=8),
+    st.text(alphabet="ab'\\", max_size=8),
+    st.none(),
+    st.booleans(),
+)
+
+
+def _unbindable(v) -> bool:
+    if isinstance(v, float):
+        return v != v or v in (float("inf"), float("-inf"))
+    return isinstance(v, str) and ("\\" in v or "\x00" in v)
+
+
+@given(st.lists(_param, min_size=0, max_size=4))
 @settings(max_examples=100, deadline=None)
 def test_bind_literals_count_parity_with_positional(params):
     """For pure-positional queries _bind_literals accepts exactly
-    len(params) %s markers and rejects any other count."""
+    len(params) %s markers and rejects any other count; a value with
+    no portable literal is refused instead of spliced."""
     import pytest
 
-    from pandas_redshift_spark.sources.bridge import _bind_literals
+    from pandas_redshift_spark.sources.bridge import _bind_literals, _sql_literal
 
     sql = " AND ".join(["c=%s"] * len(params)) or "SELECT 1"
+    if any(_unbindable(v) for v in params):
+        with pytest.raises(ValueError):
+            _bind_literals(sql, params)
+        return
     out = _bind_literals(sql, params)
-    assert "%s" not in out
+    # every marker replaced by its literal (a text VALUE may itself
+    # hold "%s", so compare the whole output, not a substring)
+    assert out == (" AND ".join(f"c={_sql_literal(v)}" for v in params) or "SELECT 1")
     with pytest.raises(ValueError):
         _bind_literals(sql + " AND extra=%s", params)
+
+
+@given(_param)
+@settings(max_examples=300, deadline=None)
+def test_sql_literal_round_trips_through_duckdb(value):
+    """Every literal _sql_literal accepts reads back as the input value
+    through a real SQL parser (DuckDB ``SELECT <lit>``); the rest raise
+    ValueError.  Finite floats may parse as DECIMAL (``0.1``), so they
+    compare as floats."""
+    import duckdb
+    import pytest
+
+    from pandas_redshift_spark.sources.bridge import _sql_literal
+
+    if _unbindable(value):
+        with pytest.raises(ValueError):
+            _sql_literal(value)
+        return
+    got = duckdb.sql(f"SELECT {_sql_literal(value)}").fetchone()[0]
+    if isinstance(value, float):
+        assert float(got) == value
+    else:
+        assert got == value and type(got) is type(value)
+
+
+def test_sql_literal_numpy_scalars_render_as_numbers():
+    """numpy integers bind as numbers, not quoted strings."""
+    import numpy as np
+
+    from pandas_redshift_spark.sources.bridge import _sql_literal
+
+    assert _sql_literal(np.int64(7)) == "7"
+    assert _sql_literal(np.int32(-3)) == "-3"
+    assert _sql_literal(np.float64(0.5)) == "0.5"
+    assert _sql_literal(np.bool_(True)) == "TRUE"
 
 
 # --- exactsum numeric invariants (operators/exactsum.py, round 9-10) ---
