@@ -380,7 +380,7 @@ def hyperplane_buckets(
         # ulp-scale near-zero projection, so both engines pin the raw
         # form and stay bit-identical.  ONE F.lit per plane: the
         # per-element form is ~1 ms of py4j round-trip per float
-        # (see _cand_struct / _pq_exprs), which at 4w planes x 64
+        # (see _pq_exprs), which at 4w planes x 64
         # dims was over a second of pure driver time per call.
         h_p = F.lit([float(v) for v in planes[p]])
         return F.when(dot(F.col("emb"), h_p) > 0, F.lit(1)).otherwise(F.lit(0))
@@ -632,19 +632,6 @@ def dedup_embedding_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMEANS_ITERS = 2
 KMEANS_SAMPLE_MOD = 4
 
-#: Above this K, dedup_semantic_ivf's two-level assignment stops
-#: embedding the codebook as plan LITERALS (O(K*d) expression tree —
-#: fine at bench K, a driver/plan-serialization bottleneck when the
-#: K = N/125 schedule tracks a 100 TB corpus) and switches to the
-#: broadcast-DataFrame argmax-join path (VERDICT r7 item 2): same
-#: floats, same strict-greater/smallest-id argmax, O(1) plan size.
-#: Env-overridable so the scale sweep and the equivalence test can
-#: force either path at any SF.  Default 128: the r8 sf1 A/B measured
-#: the crossover below K=160 (literal 4.00 s vs broadcast 2.11 s at
-#: sf1, BENCH_scale_r08.md) — codegen/plan cost of the literal tree
-#: overtakes the two broadcast exchanges well before the 1024 guess.
-CODEBOOK_LITERAL_MAX_K = int(os.environ.get("PRS_CODEBOOK_LITERAL_MAX_K", "128"))
-
 #: Hard ceiling for the DRIVER-side super-centroid trainer
 #: (:func:`super_centroids` is O(iters * K * sqrt(K) * dims) pure
 #: Python — ~1e8 float ops at this bound, seconds; past it the
@@ -660,8 +647,8 @@ SUPER_TRAIN_MAX_K = 16384
 #: whose driver traffic is O(sqrt(K) x dims): only the S = ceil(
 #: sqrt(K)) super-codebook ever crosses the driver; the K child
 #: centroids live and iterate as a DataFrame keyed by super-cell and
-#: are consumed via a shuffle join (:func:`_assign_two_level_join`),
-#: never broadcast.  Ceiling math: S <= 16384 covers K <= 2.7e8,
+#: reach :func:`_assign_two_level` as a ``(sup, kids)`` frame grouped
+#: from that DataFrame, never collected.  Ceiling math: S <= 16384 covers K <= 2.7e8,
 #: i.e. N <= 3.3e10 vectors under the K = N/125 schedule — past
 #: 100 TB of 64-dim embeddings.  Default matches SUPER_TRAIN_MAX_K
 #: (the flat path's own driver bound); every fixture SF trains K
@@ -1004,29 +991,17 @@ def super_centroids(
     return sups, c2s
 
 
-def _cand_struct(cand_id: int, vec: list) -> Column:
-    """``struct<id: long, cen: array<double>>`` literal candidate.
-    ``F.lit(list)`` builds the whole array literal in ONE py4j call —
-    per-element ``F.lit`` floats measured ~1 ms of driver round-trip
-    EACH, which at the sf1 scale sample's K=160 x 64 dims is ~10 s of
-    pure expression construction."""
-    return F.struct(
-        F.lit(int(cand_id)).cast("long").alias("id"),
-        F.lit([float(x) for x in vec]).alias("cen"),
-    )
-
-
 def argmax_dot(vec: Column, cands: Column) -> Column:
     """Id of the candidate (array<struct<id, cen>>, id-ascending) with
     the max dot product against ``vec`` — ties keep the smallest id,
     exactly ``row_number() OVER (ORDER BY dot DESC, id)`` = 1.
 
-    A pure per-row fold over broadcast literals: nearest-centroid
-    assignment becomes a NARROW projection — no join, no shuffle, no
-    window — the plan you want when the corpus is 100 TB and the
-    codebook is kilobytes.  (At extreme K the same argmax runs as a
-    broadcast join + max(struct) partial agg; the fold form keeps the
-    bench plans one stage.)"""
+    A pure per-row fold: nearest-centroid assignment becomes a NARROW
+    projection — no shuffle, no window, no aggregate — the plan you
+    want when the corpus is 100 TB and the codebook is kilobytes.
+    ``cands`` is a literal (PQ's sub-codebooks) or a column of a
+    broadcast codebook frame (:func:`_assign_two_level`), so the
+    codebook can travel as data and plan size stays O(1) in K."""
     init = F.struct(
         F.lit(float("-inf")).alias("sim"), F.lit(-1).cast("long").alias("id")
     )
@@ -1040,109 +1015,86 @@ def argmax_dot(vec: Column, cands: Column) -> Column:
     return F.aggregate(cands, init, step, lambda acc: acc["id"])
 
 
-def _assign_two_level_literal(
-    emb: DataFrame, sups: list, c2s: dict, cents: list, live: set
-) -> DataFrame:
-    """Two-level nearest-cell assignment with the codebook embedded as
-    PLAN LITERALS — a narrow projection (argmax folds over literal
-    arrays: no join, no shuffle, no window), the one-stage plan the
-    bench runs.  Plan size is O(K*d) literals, so this path is gated
-    at ``CODEBOOK_LITERAL_MAX_K``; past that the broadcast twin
-    (:func:`_assign_two_level_broadcast`) computes the identical
-    result with an O(1) plan.  Returns ``(vec_id, cell, emb_n)``."""
-    sup_arr = F.array(
-        *[_cand_struct(sid, sen) for sid, sen in sorted(sups) if sid in live]
+_CANDS_TYPE = "array<struct<id: long, cen: array<double>>>"
+
+
+def _cands(rows: list) -> list:
+    """``[(id, [floats])]`` id-ascending — the candidate order
+    :func:`argmax_dot`'s smallest-id tie rule needs."""
+    return [(int(i), [float(x) for x in v]) for i, v in sorted(rows)]
+
+
+def _sups_frame(spark: SparkSession, sups: list) -> DataFrame:
+    """Level-1 codebook of :func:`_assign_two_level`: a 1-row broadcast
+    frame ``sups array<struct<id, cen>>`` holding ``sups``."""
+    return broadcast(
+        spark.createDataFrame([(_cands(sups),)], schema=f"sups {_CANDS_TYPE}")
     )
+
+
+def _kids_frame(spark: SparkSession, c2s: dict, cents: list) -> DataFrame:
+    """Level-2 codebook ``(sup, kids array<struct<id, cen>>)`` built
+    from the driver-side flat codebook and broadcast (S rows, K
+    centroids in all)."""
     kids: dict[int, list] = {}
-    for cell, vec in sorted(cents):
-        kids.setdefault(c2s[cell], []).append(_cand_struct(cell, vec))
-    child_map = F.create_map(
-        *[
-            x
-            for sup, arr in kids.items()
-            for x in (F.lit(int(sup)).cast("long"), F.array(*arr))
-        ]
-    )
-    cell = argmax_dot(
-        F.col("emb_n"),
-        F.element_at(child_map, argmax_dot(F.col("emb_n"), sup_arr)),
-    )
-    # persist the PRENORMALIZED vector only: the pair stage downstream
-    # then runs one dot fold per candidate pair — no per-pair
-    # divisions, and a ~half-size persisted frame
-    return emb.select("vec_id", cell.alias("cell"), "emb_n")
-
-
-def _assign_two_level_broadcast(
-    spark: SparkSession, emb: DataFrame, sups: list, c2s: dict, cents: list, live: set
-) -> DataFrame:
-    """Two-level nearest-cell assignment via BROADCAST codebook frames
-    (VERDICT r7 item 2 — the big-K lift path): the same floats as
-    :func:`_assign_two_level_literal` travel as broadcast relation
-    DATA instead of expression-tree literals, so plan size is O(1) in
-    K and whole-stage codegen never sees the codebook.
-
-    Math/determinism identical to the literal fold, pinned two ways:
-
-    - the dot is the same :func:`dot` fold per candidate row;
-    - the argmax is ``max(struct(sim, -id))`` — lexicographic struct
-      max keeps the greatest sim and, on exact float ties, the
-      greatest ``-id`` = SMALLEST id, exactly the strict-greater fold
-      (and DuckDB's ``row_number() OVER (ORDER BY lip DESC, id)``).
-      NaN sims can't arise: ``_emb_double`` filters zero-norm vectors
-      and centroids are unit vectors.
-
-    Shuffle shape at 100 TB: two broadcast joins (S-row and K-row
-    codebooks — kilobytes to low MB) each followed by a partial-agg
-    max, so the corpus crosses the wire twice keyed by vec_id with
-    map-side combine shrinking N*S / N*(K/S) candidate rows to N
-    before each exchange.  Returns ``(vec_id, cell, emb_n)``."""
-    sup_rows = [
-        (int(sid), [float(x) for x in sen])
-        for sid, sen in sorted(sups)
-        if sid in live
-    ]
-    child_rows = [
-        (int(c2s[cell]), int(cell), [float(x) for x in vec])
-        for cell, vec in sorted(cents)
-    ]
-    sup_df = broadcast(
-        spark.createDataFrame(sup_rows, schema="sup long, s_en array<double>")
-    )
-    child_df = broadcast(
+    for cell, vec in cents:
+        kids.setdefault(int(c2s[cell]), []).append((cell, vec))
+    return broadcast(
         spark.createDataFrame(
-            child_rows, schema="sup long, cell long, c_en array<double>"
+            [(sup, _cands(rows)) for sup, rows in sorted(kids.items())],
+            schema=f"sup long, kids {_CANDS_TYPE}",
         )
     )
 
-    def neg(col: str) -> Column:
-        return (-F.col(col)).cast("long")
 
-    v2s = (
-        emb.join(sup_df, how="cross")
-        .withColumn("s_sim", dot(F.col("emb_n"), F.col("s_en")))
-        .groupBy("vec_id")
-        .agg(
-            # emb_n is constant per vec_id, so first() is
-            # order-insensitive here (value-deterministic)
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("s_sim").alias("sim"), neg("sup").alias("nid"))
-            ).alias("m"),
-        )
-        .select("vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("sup"))
+def _kids_of(child_df: DataFrame) -> DataFrame:
+    """Level-2 codebook ``(sup, kids)`` grouped from a ``(sup, cell,
+    c_en)`` child-codebook DataFrame — the hierarchical regime, whose
+    K children never reach the driver.  ``array_sort`` orders the
+    structs by their first field, the (unique) id."""
+    return child_df.groupBy("sup").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(F.col("cell").alias("id"), F.col("c_en").alias("cen"))
+            )
+        ).alias("kids")
     )
-    return (
-        v2s.join(child_df, "sup")
-        .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
-        .groupBy("vec_id")
-        .agg(
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("c_sim").alias("sim"), neg("cell").alias("nid"))
-            ).alias("m"),
-        )
-        .select("vec_id", (-F.col("m.nid")).cast("long").alias("cell"), "emb_n")
+
+
+def _nearest_sup(df: DataFrame, sups: DataFrame) -> DataFrame:
+    """``df`` plus ``sup``: cross ``df`` with the 1-row ``sups`` frame
+    and fold."""
+    return df.crossJoin(sups).select(
+        *df.columns, argmax_dot(F.col("emb_n"), F.col("sups")).alias("sup")
+    )
+
+
+def _nearest_kid(df: DataFrame, kids: DataFrame) -> DataFrame:
+    """``df`` (which carries ``sup``) plus ``cell``: join each row to
+    its super-cell's ``kids`` and fold.  The join is LEFT so Catalyst
+    infers no ``isnotnull(sup)`` on ``df``: on an inner join it pushes
+    that check into the level-1 join condition, evaluating the level-1
+    fold twice per row."""
+    return df.join(kids, "sup", "left").select(
+        *df.columns, argmax_dot(F.col("emb_n"), F.col("kids")).alias("cell")
+    )
+
+
+def _assign_two_level(emb: DataFrame, sups: DataFrame, kids: DataFrame) -> DataFrame:
+    """Two-level nearest-cell assignment, ``(vec_id, cell, emb_n)``:
+    each vector folds over the S super-centroids (``sups``, from
+    :func:`_sups_frame`), then over only its winning super-cell's
+    children (``kids``, from :func:`_kids_frame` or :func:`_kids_of`).
+
+    The codebook travels as broadcast relation data into the
+    :func:`argmax_dot` fold, never as expression-tree literals, so the
+    plan is O(1) in K and the corpus side has no aggregate or window:
+    level 1 is a 1-row broadcast nested-loop join, level 2 a broadcast
+    (flat) or shuffle (hierarchical) equi-join on ``sup``.  Every super in
+    ``sups`` must own at least one child: a vector routed to a
+    childless super would get a NULL cell."""
+    return _nearest_kid(_nearest_sup(emb, sups), kids).select(
+        "vec_id", "cell", "emb_n"
     )
 
 
@@ -1167,22 +1119,26 @@ def train_kmeans_hierarchical(
 
     1. supers: flat ``train_kmeans_centroid_values`` at K=S.
     2. the sample is assigned to its nearest super Spark-side
-       (broadcast of the S-row codebook only).
+       (:func:`_nearest_sup`: the S-row codebook is the only
+       broadcast).
     3. per super-cell, ceil(K/S) children seed from the cell's
        smallest-id sample vectors and run the same Lloyd iterations
-       ENTIRELY as DataFrame ops — assignment is a shuffle join on
-       ``sup`` (children co-partitioned with their members), means
+       ENTIRELY as DataFrame ops — assignment is
+       :func:`_nearest_kid` over the children grouped per ``sup``
+       (:func:`_kids_of`, a shuffle join on ``sup``), means
        are the same order-pinned posexplode folds, renorm +
        keep-prev are native array ops.  ``localCheckpoint`` after
        each iteration truncates lineage; per-iteration driver
        traffic is zero.
 
-    The output feeds :func:`_assign_two_level_join`.  This path is
-    NOT DuckDB-replayed (no fixture SF reaches the threshold — the
-    hash gate always exercises the flat trainer); its correctness
-    contract is the forced-threshold structural test in
-    tests/test_extensions.py.  Memoized per session (family
-    ``kmeans_hier``)."""
+    The output feeds :func:`_assign_two_level` (``sups`` through
+    :func:`_sups_frame`, ``child_df`` through :func:`_kids_of`) —
+    the same two folds the training steps use.  No fixture SF
+    reaches the threshold, so the primary oracle always exercises the
+    flat trainer; this regime is replayed by the cert oracle
+    (:func:`_hier_replay_ctes`) and held by the forced-threshold
+    tests in tests/test_extensions.py and tests/test_cert_oracles.py.
+    Memoized per session (family ``kmeans_hier``)."""
 
     def build() -> tuple[list, DataFrame]:
         s_cells = math.ceil(math.sqrt(k_cells))
@@ -1190,31 +1146,10 @@ def train_kmeans_hierarchical(
         sups = train_kmeans_centroid_values(
             spark, emb, s_cells, ("hier_super", *cache_key)
         )
-        sup_df = broadcast(
-            spark.createDataFrame(
-                [(int(s), [float(x) for x in v]) for s, v in sups],
-                schema="sup long, s_en array<double>",
-            )
-        )
-
-        def neg(col: str) -> Column:
-            return (-F.col(col)).cast("long")
-
-        samp_sup = (
-            emb.filter(F.col("vec_id") % sample_mod == 0)
-            .select("vec_id", "emb_n")
-            .join(sup_df, how="cross")
-            .withColumn("s_sim", dot(F.col("emb_n"), F.col("s_en")))
-            .groupBy("vec_id")
-            .agg(
-                F.first("emb_n").alias("emb_n"),
-                F.max(
-                    F.struct(F.col("s_sim").alias("sim"), neg("sup").alias("nid"))
-                ).alias("m"),
-            )
-            .select("vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("sup"))
-            .localCheckpoint(eager=True)
-        )
+        samp_sup = _nearest_sup(
+            emb.filter(F.col("vec_id") % sample_mod == 0).select("vec_id", "emb_n"),
+            _sups_frame(spark, sups),
+        ).localCheckpoint(eager=True)
 
         w_seed = Window.partitionBy("sup").orderBy("vec_id")
         child = (
@@ -1225,21 +1160,7 @@ def train_kmeans_hierarchical(
         )
 
         for _ in range(iters):
-            asg = (
-                samp_sup.join(child, "sup")
-                .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
-                .groupBy("vec_id")
-                .agg(
-                    F.first("sup").alias("sup"),
-                    F.first("emb_n").alias("emb_n"),
-                    F.max(
-                        F.struct(F.col("c_sim").alias("sim"), neg("cell").alias("nid"))
-                    ).alias("m"),
-                )
-                .select(
-                    "sup", "vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("cell")
-                )
-            )
+            asg = _nearest_kid(samp_sup, _kids_of(child))
             means = (
                 asg.select("sup", "cell", "vec_id", F.posexplode("emb_n").alias("dim", "val"))
                 .groupBy("sup", "cell", "dim")
@@ -1282,13 +1203,12 @@ def train_kmeans_hierarchical(
             )
 
         # only supers that won at least one child are scoreable: the
-        # level-2 join in :func:`_assign_two_level_join` is INNER on
-        # ``sup``, so a corpus vector whose nearest super had no sample
-        # members (hence no children) would silently vanish from the
-        # assignment, breaking the every-vector-covered contract (ADVICE
-        # r10).  Mirrors the flat path's ``live`` filter at the call
-        # site; the distinct-sup collect is O(S) = O(sqrt(K)) driver
-        # rows, the same order as the ``sups`` literal itself.
+        # level-2 fold of :func:`_assign_two_level` would give a corpus
+        # vector whose nearest super had no sample members (hence no
+        # children) a NULL cell, breaking the every-vector-in-a-cell
+        # contract (ADVICE r10).  Mirrors the flat path's ``live``
+        # filter at the call site; the distinct-sup collect is O(S) =
+        # O(sqrt(K)) driver rows, the same order as ``sups`` itself.
         live = {r[0] for r in child.select("sup").distinct().collect()}
         sups = [(s, v) for s, v in sups if s in live]
 
@@ -1296,53 +1216,6 @@ def train_kmeans_hierarchical(
 
     key = (*cache_key, k_cells, iters, sample_mod)
     return SESSION_MEMO.get(spark, "kmeans_hier", key, build)
-
-
-def _assign_two_level_join(
-    spark: SparkSession, emb: DataFrame, sups: list, child_df: DataFrame
-) -> DataFrame:
-    """Two-level nearest-cell assignment for codebooks past the
-    broadcast ceiling: level 1 broadcasts only the S-row super
-    codebook; level 2 is a SHUFFLE join on ``sup`` against the
-    child-codebook DataFrame (each vector meets only its super-cell's
-    ~sqrt(K) children), so nothing O(K) ever crosses the driver or a
-    broadcast.  Same argmax rule (lexicographic ``max(struct(sim,
-    -id))``) as :func:`_assign_two_level_broadcast`; returns
-    ``(vec_id, cell, emb_n)``."""
-    sup_df = broadcast(
-        spark.createDataFrame(
-            [(int(s), [float(x) for x in v]) for s, v in sups],
-            schema="sup long, s_en array<double>",
-        )
-    )
-
-    def neg(col: str) -> Column:
-        return (-F.col(col)).cast("long")
-
-    v2s = (
-        emb.join(sup_df, how="cross")
-        .withColumn("s_sim", dot(F.col("emb_n"), F.col("s_en")))
-        .groupBy("vec_id")
-        .agg(
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("s_sim").alias("sim"), neg("sup").alias("nid"))
-            ).alias("m"),
-        )
-        .select("vec_id", "emb_n", (-F.col("m.nid")).cast("long").alias("sup"))
-    )
-    return (
-        v2s.join(child_df, "sup")
-        .withColumn("c_sim", dot(F.col("emb_n"), F.col("c_en")))
-        .groupBy("vec_id")
-        .agg(
-            F.first("emb_n").alias("emb_n"),
-            F.max(
-                F.struct(F.col("c_sim").alias("sim"), neg("cell").alias("nid"))
-            ).alias("m"),
-        )
-        .select("vec_id", (-F.col("m.nid")).cast("long").alias("cell"), "emb_n")
-    )
 
 
 def _super_ctes(iters: int = KMEANS_ITERS) -> str:
@@ -1924,8 +1797,8 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       cache key, which carries the slice width);
     - encode: each corpus vector becomes 8 code ids (argmax dot vs the
       32 sub-centroids, ties -> smaller id) — a NARROW literal-fold
-      projection (codebook is 8x32x8 = 2k doubles, far under
-      CODEBOOK_LITERAL_MAX_K concerns), after which the scoring scan
+      projection (the codebook is 8x32x8 = 2k doubles, a few literal
+      arrays whatever the corpus size), after which the scoring scan
       reads ~8 longs per vector instead of 64 doubles: that 8x scan
       shrink is the entire point at 100 TB;
     - ADC: each query precomputes a 32-entry lookup table per subspace
@@ -2025,9 +1898,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emb_n pass plus its ensure_parallelism exchange — just to feed a
     # 64xQ-row broadcast join; the per-row divide-by-norm arithmetic
     # below is _emb_double's exact expression, so every score is
-    # bit-identical).  The nrm > 0 filter is _emb_double's zero-norm
-    # guard — vacuous here (the shortlist only holds survivors) but
-    # kept so the branch's corpus predicate stays aligned.
+    # bit-identical).  No zero-norm guard: shortlist ids come from
+    # _emb_double, which already dropped zero-norm rows, and a guard
+    # here would be pushed below the join onto every corpus row.
     raw = t.embeddings.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("emb"),
@@ -2035,7 +1908,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         raw.join(broadcast(short), "neighbor_id")
         .withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
-        .filter(F.col("nrm") > 0)
         .withColumn(
             "n_en",
             F.zip_with(
@@ -2285,7 +2157,7 @@ def _hier_replay_ctes(
     n_dims: int = EMBEDDING_DIMS,
 ) -> str:
     """CTE chain replaying the HIERARCHICAL schedule
-    (:func:`train_kmeans_hierarchical` + :func:`_assign_two_level_join`)
+    (:func:`train_kmeans_hierarchical` + :func:`_assign_two_level`)
     in DuckDB, bit-exactly, ending in ``assigned(vec_id, cell)`` over
     the full corpus (VERDICT r13 item 5: the hierarchical regime had
     no replay — its cert boundary was a NotImplementedError guard).
@@ -2297,7 +2169,8 @@ def _hier_replay_ctes(
        ``centshs``), the machinery already certified at sf0.01-sf3;
     2. ``samp_sup``: each sample vector to its max-dot super
        (``row_number ORDER BY lip DESC, id`` == Spark's
-       ``max(struct(sim, -id))`` — ties to the smaller id);
+       :func:`argmax_dot` fold over id-ascending candidates — ties to
+       the smaller id);
     3. child seeds: per super, the ceil(K/S) smallest-id sample
        members (``row_number OVER (PARTITION BY sup ORDER BY
        vec_id)``), cell = seed vec_id — globally unique;
@@ -2569,21 +2442,23 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     no rounding guard; the super-trainer's means are order-pinned
     folds, bit-exact with no rounding at all).
 
-    Scale design: this IS the SemDeDup cost model, now linear
-    end-to-end — at bench K the assignment is a NARROW projection
-    (argmax folds over plan-literal codebooks: no join, no shuffle,
-    no window, :func:`_assign_two_level_literal`); above
-    ``CODEBOOK_LITERAL_MAX_K`` the identical math runs as two
-    broadcast-join argmaxes (:func:`_assign_two_level_broadcast`) so
-    plan size stays O(1) while the K = N/125 schedule grows — the
-    r7-verdict plan-serialization ceiling is gone (the two paths are
-    pinned hash-identical by tests/test_extensions.py's forced-
-    threshold equivalence test).  Measured on the 10x sf0.1->sf1 step
-    (BENCH_scale_r08.md, same-session A/B): literal path 1.12->4.00 s
-    (3.6x — codegen/plan cost growing with K=16->160), broadcast path
-    1.79->2.11 s (1.2x); as shipped (threshold 128) the operator runs
-    literal below the crossover and broadcast above it, 1.12->2.11 s
-    = 1.9x per 10x data.  The pairwise stage is
+    Scale design: this IS the SemDeDup cost model, linear end-to-end.
+    Assignment has ONE path at every K (:func:`_assign_two_level`):
+    the codebook travels as broadcast data into the
+    :func:`argmax_dot` fold — a 1-row broadcast cross join for the
+    supers, an equi-join on ``sup`` for the children, no aggregate or
+    window — so plan size stays O(1) while the K = N/125 schedule
+    grows.  It replaced a plan-literal path (O(K*d) literals, 3.6x
+    slower on the 10x sf0.1->sf1 step, BENCH_scale_r08.md) and two
+    paths that took the argmax as a grouped max over (sim, -id)
+    structs; in interleaved fresh-process runs on 4 CPUs it was no
+    slower than the literal path at sf0.1 (K=16; warm median 2.29 vs
+    3.32 s) or the grouped-max path at sf1 (K=160; 9.33 vs 9.24 s,
+    inside that path's 8.8-10.3 s run spread).  Past
+    ``KMEANS_FLAT_TRAIN_MAX_K`` only the codebook's source changes:
+    the hierarchical trainer's child DataFrame is grouped per super
+    (:func:`_kids_of`) instead of broadcast from the driver.  The
+    pairwise stage is
     confined within cells, so the candidate space is sum(|cell|^2)
     not |corpus|^2.  **K scales with the
     corpus**: K = max(16, ceil(N/125)) holds the target cell size at
@@ -2605,38 +2480,35 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         k_cells = max(16, math.ceil(n_vecs / 125.0))
         if k_cells > KMEANS_FLAT_TRAIN_MAX_K:
             # past the flat trainer's driver ceiling: hierarchical
-            # training + shuffle-join assignment — nothing O(K)
-            # crosses the driver (VERDICT r9 item 3).  Never reached
-            # at a fixture SF (threshold math in the constant's doc);
-            # structural contract tested via forced threshold.
+            # training, children grouped per super from a DataFrame —
+            # nothing O(K) crosses the driver (VERDICT r9 item 3).
+            # Never reached at a fixture SF (threshold math in the
+            # constant's doc); tested via forced threshold.
             hsups, child_df = train_kmeans_hierarchical(
                 spark, emb, k_cells, cache_key=("kmeans", sf_dir)
             )
-            return _assign_two_level_join(spark, emb, hsups, child_df)
+            return _assign_two_level(
+                emb, _sups_frame(spark, hsups), _kids_of(child_df)
+            )
         cents = train_kmeans_centroid_values(
             spark, emb, k_cells, cache_key=("kmeans", sf_dir)
         )
         sups, c2s = super_centroids(cents, math.ceil(math.sqrt(k_cells)))
         # only super-cells that won at least one child are scoreable
         # (a vector routed to a childless super would have no cell)
-        live = {s for s in c2s.values()}
-        if k_cells <= CODEBOOK_LITERAL_MAX_K:
-            return _assign_two_level_literal(emb, sups, c2s, cents, live)
-        return _assign_two_level_broadcast(spark, emb, sups, c2s, cents, live)
+        live = set(c2s.values())
+        return _assign_two_level(
+            emb,
+            _sups_frame(spark, [(s, v) for s, v in sups if s in live]),
+            _kids_frame(spark, c2s, cents),
+        )
 
-    # the threshold is part of the memo key: the assignment PATH
-    # (literal vs broadcast) is a function of it, and the equivalence
-    # test flips it mid-session — a keyless memo would replay the
-    # other path's persisted frame
+    # the flat ceiling is part of the memo key: the trainer (flat vs
+    # hierarchical) is a function of it, and the forced-threshold
+    # tests flip it mid-session — a keyless memo would replay the
+    # other regime's persisted frame
     assigned = memoized_persist(
-        spark,
-        (
-            "semdedup_assigned",
-            sf_dir,
-            CODEBOOK_LITERAL_MAX_K,
-            KMEANS_FLAT_TRAIN_MAX_K,
-        ),
-        build,
+        spark, ("semdedup_assigned", sf_dir, KMEANS_FLAT_TRAIN_MAX_K), build
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     dup = (

@@ -94,10 +94,11 @@ def test_semdedup_cert_oracle_hierarchical_regime(spark, sf_dir, monkeypatch):
     a NotImplementedError boundary in the cert oracle; now it is a
     full independent SQL replay (_hier_replay_ctes).  With the flat
     ceiling forced below the fixture's K, the Spark side routes
-    through train_kmeans_hierarchical + _assign_two_level_join and
-    the cert oracle must hash-match it end to end — the same triangle
-    contract the flat regime holds (no primary-oracle leg here: the
-    static primary replays the flat schedule by construction)."""
+    through train_kmeans_hierarchical + _assign_two_level (its child
+    DataFrame grouped per super by _kids_of) and the cert oracle must
+    hash-match it end to end — the same triangle contract the flat
+    regime holds (no primary-oracle leg here: the static primary
+    replays the flat schedule by construction)."""
     import pandas_redshift_spark.operators.similarity as sim
     from pandas_redshift_spark.session import SESSION_MEMO
 

@@ -107,3 +107,39 @@ def test_nullable_int_chunk_dtype_invariance() -> None:
     xb, yb = ds.row_hash_sum(as_float_with_null.copy())
     xc, yc = ds.row_hash_sum(one_chunk_nullable.copy())
     assert (xa + xb) == xc and (ya + yb) % (1 << 128) != yc
+
+
+def test_warm_pool_starts_every_worker(monkeypatch) -> None:
+    """The digest pool's prewarm must start all its workers before the
+    first oracle fetch.  The executor spawns a worker per submit only
+    while none is idle, so the test slows the submit loop down: each
+    submit first waits (bounded) for the previous prewarm task to end.
+    A prewarm task that could end early would leave its worker idle
+    and get it reused; the prewarm's tasks end only once every worker
+    has started, so the pool must still answer from ``procs`` distinct
+    processes.  Spark-free."""
+    import concurrent.futures as cf
+    import time
+
+    # spawned workers unpickle the prewarm task by module name, so the
+    # module must be importable from sys.path, not only loaded by path
+    monkeypatch.syspath_prepend(os.path.join(REPO, "tools"))
+    import driver_sim
+
+    submit, last = cf.ProcessPoolExecutor.submit, []
+
+    def slow_submit(self, fn, *args, **kwargs):
+        if last:
+            cf.wait(last[-1:], timeout=8)
+            time.sleep(0.2)  # the manager thread marks a worker idle
+        last.append(submit(self, fn, *args, **kwargs))
+        return last[-1]
+
+    monkeypatch.setattr(cf.ProcessPoolExecutor, "submit", slow_submit)
+    procs = 2
+    ex, pids = driver_sim.warm_pool(procs)
+    try:
+        assert len(set(pids)) == procs, pids
+        assert {p.pid for p in ex._processes.values()} == set(pids)
+    finally:
+        ex.shutdown()

@@ -1192,11 +1192,13 @@ def test_semantic_ivf_dedup_matches_numpy_reference(spark):
     replay of the FULL pipeline at sf0.001 — prenormalization, the
     deterministic sampled k-means training (seeds, per-iteration
     assignment, order-pinned unrounded per-dim means, left-fold
-    renorm, empty-cell carryover), the r7 TWO-LEVEL assignment
+    renorm, empty-cell carryover), the TWO-LEVEL assignment
     (super-centroid k-means over the child codebook with the same
-    pinned means, then nearest-child-within-super), and the parallel
-    min-id drop rule.  Dot products use an explicit LEFT-TO-RIGHT
-    fold over element products — the same order as Spark's
+    pinned means, then nearest-child-within-super — the engine's one
+    assignment path, broadcast codebook frames folded by argmax_dot,
+    strict-greater with the smallest id winning ties), and the
+    parallel min-id drop rule.  Dot products use an explicit
+    LEFT-TO-RIGHT fold over element products — the same order as Spark's
     ``aggregate`` — so the reference is bit-identical to the engine;
     BLAS matmul (blocked/FMA/pairwise) can differ in the last ulps,
     which would make threshold/argmax decisions at a boundary a
@@ -1479,30 +1481,15 @@ def test_psi_drift_invariants(spark, sf_dir):
     assert total == Tables(spark, sf_dir).events.count()
 
 
-def test_semdedup_broadcast_assignment_matches_literal(spark, sf_dir, monkeypatch):
-    """The big-K broadcast-codebook assignment path (VERDICT r7 item 2)
-    must be HASH-IDENTICAL to the plan-literal path it replaces above
-    CODEBOOK_LITERAL_MAX_K: same floats, same strict-greater/smallest-
-    id argmax, so flipping the threshold may not move a single row.
-    Exercised end-to-end through dedup_semantic_ivf (the memo key
-    carries the threshold, so both paths really build)."""
+def test_semdedup_assignment_plan_carries_codebook_as_data(spark, sf_dir):
+    """The one two-level assignment path ships the codebook as
+    broadcast relation DATA into the argmax_dot fold: plan size is
+    O(1) in K (no centroid double is printed in the plan text), and
+    nothing aggregates between the corpus scan and the assignment —
+    both levels are folds, level 1 a 1-row broadcast nested-loop join
+    and level 2 a broadcast equi-join on ``sup``."""
     import pandas_redshift_spark.operators.similarity as sim
-
-    lit = sorted(map(tuple, sim.dedup_semantic_ivf(spark, sf_dir).collect()))
-    monkeypatch.setattr(sim, "CODEBOOK_LITERAL_MAX_K", 0)
-    bc = sorted(map(tuple, sim.dedup_semantic_ivf(spark, sf_dir).collect()))
-    assert lit == bc
-    assert len(lit) > 0
-
-
-def test_semdedup_broadcast_plan_carries_no_codebook_literals(spark, sf_dir):
-    """The whole point of the broadcast path: plan SIZE is O(1) in K.
-    The literal path embeds every centroid as a named_struct literal
-    (O(K) occurrences); the broadcast path's plan must stay free of
-    that expansion — the codebook travels as broadcast relation data,
-    and the only struct constructors left are the two argmax
-    max(struct(sim, nid)) aggregates."""
-    import pandas_redshift_spark.operators.similarity as sim
+    from pandas_redshift_spark.plans.layout import explain_str
     from pandas_redshift_spark.session import Tables
 
     t = Tables(spark, sf_dir)
@@ -1512,29 +1499,18 @@ def test_semdedup_broadcast_plan_carries_no_codebook_literals(spark, sf_dir):
     )
     sups, c2s = sim.super_centroids(cents, 4)
     live = set(c2s.values())
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-
-    lit_plan = (
-        sim._assign_two_level_literal(emb, sups, c2s, cents, live)
-        ._jdf.queryExecution()
-        .explainString(mode)
+    plan = explain_str(
+        sim._assign_two_level(
+            emb,
+            sim._sups_frame(spark, [(s, v) for s, v in sups if s in live]),
+            sim._kids_frame(spark, c2s, cents),
+        ),
+        "simple",
     )
-    bc_plan = (
-        sim._assign_two_level_broadcast(spark, emb, sups, c2s, cents, live)
-        ._jdf.queryExecution()
-        .explainString(mode)
-    )
-    # the literal path's struct constructors constant-fold into plain
-    # literal arrays, so the tell is the centroid DOUBLES themselves:
-    # every dim of the first child centroid is printed verbatim in the
-    # literal plan and absent from the broadcast plan (measured at
-    # K=16/d=64: ~29.6k chars literal vs ~3.6k broadcast)
-    sentinel = str(cents[0][1][0])
-    assert sentinel in lit_plan, lit_plan[:2000]
-    assert sentinel not in bc_plan, bc_plan
-    assert "BroadcastHashJoin" in bc_plan or "BroadcastNestedLoopJoin" in bc_plan
-    # and the broadcast plan must not be the one paying O(K*d) text
-    assert len(bc_plan) < len(lit_plan) / 4
+    for vec in (cents[0][1], sups[0][1]):
+        assert str(vec[0]) not in plan, plan
+    assert "Aggregate" not in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan and "BroadcastHashJoin" in plan, plan
 
 
 def test_super_trainer_rejects_extreme_k(spark):
@@ -1706,14 +1682,17 @@ def test_semdedup_hierarchical_trainer_structural(spark, sf_dir, monkeypatch):
     """Forced-threshold contract for the big-K hierarchical path
     (VERDICT r9 item 3): with KMEANS_FLAT_TRAIN_MAX_K monkeypatched
     below the fixture's K, dedup_semantic_ivf must route through
-    train_kmeans_hierarchical + _assign_two_level_join and still
-    satisfy the operator's semantic contract.  The path is NOT
-    oracle-replayed (no fixture SF reaches the real threshold), so
-    this test IS its correctness gate:
+    train_kmeans_hierarchical + _assign_two_level (children grouped
+    per super by _kids_of instead of broadcast from the driver) and
+    still satisfy the operator's semantic contract.  No fixture SF
+    reaches the real threshold, so the primary oracle never sees this
+    regime; this test and the cert-oracle replay
+    (tests/test_cert_oracles.py) are its correctness gates:
 
     - the child codebook has one row per (sup, cell), <= K cells,
       every centroid unit-norm, every sup drawn from the super list;
-    - the assignment covers every corpus vector exactly once;
+    - the assignment covers every corpus vector exactly once, each
+      with a cell;
     - every DROPPED vector has an earlier same-cell mate at
       cosine >= tau, and every KEPT vector has none (the min-id-wins
       parallel drop rule, re-verified from raw vectors).
@@ -1742,8 +1721,8 @@ def test_semdedup_hierarchical_trainer_structural(spark, sf_dir, monkeypatch):
     assert len({(r["sup"], r["cell"]) for r in crows}) == len(crows)
     sup_ids = {s for s, _ in sups}
     # ADVICE r10 fix: the trainer returns ONLY live supers (those with
-    # >=1 child), so the inner join in _assign_two_level_join can
-    # never drop a vector routed to a childless super
+    # >=1 child), so the level-2 fold in _assign_two_level never
+    # leaves a vector routed to a childless super without a cell
     assert sup_ids == {r["sup"] for r in crows}
     for r in crows:
         assert r["sup"] in sup_ids
@@ -1755,6 +1734,7 @@ def test_semdedup_hierarchical_trainer_structural(spark, sf_dir, monkeypatch):
     n_corpus = emb.count()
     assert out.count() == n_corpus
     assert out.select("vec_id").distinct().count() == n_corpus
+    assert out.filter(F.col("cell").isNull()).count() == 0
 
     tau = 0.3
     pairs = (
@@ -1773,15 +1753,16 @@ def test_semdedup_hierarchical_trainer_structural(spark, sf_dir, monkeypatch):
     assert dropped == flagged
 
 
-def test_two_level_join_assignment_matches_broadcast(spark, sf_dir):
-    """The shuffle-join assignment path (`_assign_two_level_join`, the
-    big-K consumer of the hierarchical trainer) must compute the SAME
-    argmax as the certified broadcast path when fed the SAME codebook:
-    build the flat-trained K=16 codebook + its super derivation (the
-    combination the driver has hash-verified end-to-end through
-    dedup_semantic_ivf), run both assignment paths on it, and require
-    row-for-row equality — pinning the join path's max(struct(sim,
-    -id)) math to the certified floats."""
+def test_two_level_kids_frames_agree(spark, sf_dir):
+    """The two level-2 codebook frames — the flat regime's
+    driver-list ``_kids_frame`` and the hierarchical regime's grouped
+    ``_kids_of`` over a ``(sup, cell, c_en)`` DataFrame — must give
+    the same id-ascending children per super and hence the same
+    assignment on the flat-trained K=16 codebook (the combination
+    dedup_semantic_ivf runs and the oracle hash-checks).  A duplicate
+    of a centroid under a LARGER id rides along: argmax_dot keeps the
+    smallest id on ties only when children are sorted, so no vector
+    may land on the duplicate through either frame."""
     import pandas_redshift_spark.operators.similarity as sim
     from pandas_redshift_spark.session import Tables
 
@@ -1792,23 +1773,30 @@ def test_two_level_join_assignment_matches_broadcast(spark, sf_dir):
     )
     sups, c2s = sim.super_centroids(cents, 4)
     live = set(c2s.values())
-
-    bc = {
-        (r["vec_id"], r["cell"])
-        for r in sim._assign_two_level_broadcast(
-            spark, emb, sups, c2s, cents, live
-        ).collect()
-    }
+    dup_id = max(c for c, _ in cents) + 1
+    cents = cents + [(dup_id, cents[0][1])]
+    c2s = {**c2s, dup_id: c2s[cents[0][0]]}
+    # descending rows: _kids_of must sort, not inherit the input order
     child_df = spark.createDataFrame(
-        [
-            (int(c2s[cell]), int(cell), [float(x) for x in vec])
-            for cell, vec in sorted(cents)
-        ],
+        [(int(c2s[c]), int(c), [float(x) for x in v]) for c, v in sorted(cents)][::-1],
         schema="sup long, cell long, c_en array<double>",
     )
-    live_sups = [(s, v) for s, v in sups if s in live]
-    jn = {
-        (r["vec_id"], r["cell"])
-        for r in sim._assign_two_level_join(spark, emb, live_sups, child_df).collect()
-    }
-    assert bc == jn and len(bc) > 0
+    sups_df = sim._sups_frame(spark, [(s, v) for s, v in sups if s in live])
+
+    def ids(kids_df) -> dict:
+        return {r["sup"]: [k["id"] for k in r["kids"]] for r in kids_df.collect()}
+
+    def assign(kids_df) -> set:
+        return {
+            (r["vec_id"], r["cell"])
+            for r in sim._assign_two_level(emb, sups_df, kids_df).collect()
+        }
+
+    drv, grp = sim._kids_frame(spark, c2s, cents), sim._kids_of(child_df)
+    assert ids(drv) == ids(grp)
+    assert all(v == sorted(v) for v in ids(drv).values())
+    a, b = assign(drv), assign(grp)
+    assert a == b
+    assert len(a) == emb.count() > 0
+    assert dup_id not in {cell for _, cell in a}
+

@@ -294,9 +294,7 @@ _AUDIT_WAIVERS = {
     "sim_knn_classify": {"bnlj": "10 broadcast query vectors"},
     "sim_ivf_topk": {"bnlj": "10 broadcast query vectors vs centroid table"},
     "sim_pq_adc_topk": {"bnlj": "10 broadcast query LUTs vs the 8x-smaller codes frame; 64xQ-row shortlist broadcast back for exact re-rank"},
-    # dedup_semantic_ivf lost its bnlj waiver in r7: the two-level
-    # assignment is a narrow literal-fold projection (no join at all),
-    # and the pair stage self-joins on the equi cell key.
+    "dedup_semantic_ivf": {"bnlj": "1-row super-codebook broadcast cross join (level 1 of the two-level assignment); the pair stage self-joins on the equi cell key"},
     "pipe_decontaminate_semantic": {"bnlj": "tiny benchmark vector set broadcast against the streamed corpus — the decontamination shape, corpus never shuffles"},
     # -- deliberately-quadratic oracle baselines (LSH twins are the defaults) --
     "dedup_embedding_cosine_exact": {"bnlj": "O(n^2) ORACLE BASELINE; registered default is the LSH-bucketed twin"},

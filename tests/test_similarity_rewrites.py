@@ -70,3 +70,19 @@ def test_pq_codes_read_presliced_subvectors(spark, sf_dir):
     df = all_queries()["sim_pq_adc_topk"].fn(spark, sf_dir)
     plan = explain_str(df, "simple")
     assert "__subs__" in plan
+
+
+def test_pq_rerank_normalizes_only_shortlist_rows(spark, sf_dir):
+    """The PQ exact re-rank joins the raw corpus to the broadcast
+    shortlist and only then takes norms: no SQRT may sit on the
+    streamed corpus side of that BroadcastHashJoin.  A zero-norm guard
+    there is pushed below the join and runs the norm fold on every
+    corpus row (shortlist ids already passed _emb_double's guard)."""
+    from pandas_redshift_spark.operators import all_queries
+
+    df = all_queries()["sim_pq_adc_topk"].fn(spark, sf_dir)
+    plan = explain_str(df, "simple")
+    streamed = plan.split("BroadcastHashJoin [neighbor_id", 1)[1]
+    streamed = streamed.split("BroadcastExchange", 1)[0]
+    assert "FileScan" in streamed, plan
+    assert "SQRT" not in streamed, streamed

@@ -177,6 +177,41 @@ def spark_chunk_digest(sdf) -> tuple[int, int]:
 DIGEST_PROCS = int(os.environ.get("SIM_DIGEST_PROCS", "1"))
 
 
+def _started_pid(barrier) -> int:
+    """Prewarm task: returns only once every pool worker has started."""
+    barrier.wait(120)
+    return os.getpid()
+
+
+def warm_pool(procs: int):
+    """``(pool, pids)``: a spawn-context process pool with all ``procs``
+    workers already started, and the pids that answered the prewarm.
+
+    Spawn, not fork (ADVICE r13): the parent holds live py4j/JVM client
+    threads and a DuckDB connection; forking a multithreaded process
+    can inherit held locks mid-acquire and hang workers intermittently.
+
+    Prewarm, because the executor spawns workers lazily per submit, and
+    the first digest submit only happens after fetch_df_chunk has
+    EXECUTED the oracle query — at which point a big DuckDB replay
+    (e.g. the sf30 phash grid) holds tens of GB across enough mmaps
+    that pthread_create/fork fail with ENOMEM ("can't start new
+    thread"; two sf30 legs died exactly there).  A submit spawns a
+    worker only when none is idle, so each prewarm task waits on a
+    ``procs``-party barrier: no worker can go idle (and be reused)
+    until all ``procs`` have started."""
+    import multiprocessing
+    from concurrent.futures import ProcessPoolExecutor
+
+    ctx = multiprocessing.get_context("spawn")
+    ex = ProcessPoolExecutor(procs, mp_context=ctx)
+    with ctx.Manager() as mgr:
+        barrier = mgr.Barrier(procs)
+        futs = [ex.submit(_started_pid, barrier) for _ in range(procs)]
+        pids = [f.result() for f in futs]
+    return ex, pids
+
+
 def duck_chunk_digest(con, sql: str) -> tuple[int, int]:
     """Streaming multiset digest of a DuckDB result (fetch_df_chunk —
     never materializes the frame).  Integer columns come from the
@@ -194,31 +229,9 @@ def duck_chunk_digest(con, sql: str) -> tuple[int, int]:
     n_tot, h_tot = 0, 0
     if DIGEST_PROCS > 1:
         import collections
-        import multiprocessing
-        from concurrent.futures import ProcessPoolExecutor
 
         futs = collections.deque()
-        # spawn, not fork (ADVICE r13): the parent holds live py4j/JVM
-        # client threads and a DuckDB connection; forking a
-        # multithreaded process can inherit held locks mid-acquire and
-        # hang workers intermittently.  row_hash_sum's inputs (a
-        # pandas chunk + a frozenset) pickle fine, so spawn costs only
-        # interpreter startup per worker — amortized over the sweep.
-        ex = ProcessPoolExecutor(
-            DIGEST_PROCS, mp_context=multiprocessing.get_context("spawn")
-        )
-        # Pre-warm the FULL pool (workers + the executor's management
-        # thread) BEFORE the first fetch: the executor spawns both
-        # lazily per submit, and the first submit only happens after
-        # fetch_df_chunk has EXECUTED the oracle query — at which
-        # point a big DuckDB replay (e.g. the sf30 phash grid) holds
-        # tens of GB across enough mmaps that pthread_create/fork
-        # fail with ENOMEM ("can't start new thread"; two sf30 legs
-        # died exactly there).  Each submit grows the pool by at most
-        # one worker, so DIGEST_PROCS no-op submits spawn everything
-        # while the process is still small.
-        for f in [ex.submit(int, 0) for _ in range(DIGEST_PROCS)]:
-            f.result()
+        ex, _ = warm_pool(DIGEST_PROCS)
         try:
             def drain_one():
                 nonlocal n_tot, h_tot
